@@ -1,0 +1,32 @@
+package graftbench
+
+/** Minimal JSON writer for the harness's report lines (numbers, strings,
+  * booleans, sequences and ordered maps). */
+object Json {
+  def obj(kv: (String, Any)*): String = kv.map { case (k, v) => s"${str(k)}:${value(v)}" }
+    .mkString("{", ",", "}")
+
+  def value(v: Any): String = v match {
+    case null => "null"
+    case s: String => str(s)
+    case b: Boolean => b.toString
+    case d: Double =>
+      if (d.isNaN || d.isInfinite) "null" else java.lang.Double.toString(d)
+    case f: Float => value(f.toDouble)
+    case n: Int => n.toString
+    case n: Long => n.toString
+    case m: collection.Map[_, _] => obj(m.toSeq.map { case (k, x) => (k.toString, x) }: _*)
+    case xs: Iterable[_] => xs.map(value).mkString("[", ",", "]")
+    case other => str(other.toString)
+  }
+
+  def str(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+}
