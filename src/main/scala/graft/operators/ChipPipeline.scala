@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.{Window => WExpr}
 import org.locationtech.jts.geom.Geometry
 import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 
-import graft.core.{Affine, Geom, Rasterize, RasterMath, Window}
+import graft.core.{Affine, Geom, LabelIndex, Rasterize, RasterMath, Window}
 import graft.sources.Model.{RasterMeta, Tile}
 
 /** Reference-parity chip extraction (satproc_extract_chips,
@@ -86,15 +86,14 @@ object ChipPipeline {
       case None => Nil
       case Some(_) => cfg.classes.getOrElse(Seq("_any"))
     }
-    val polysByClass: Map[String, Seq[Array[Byte]]] = labels match {
-      case None => Map.empty
+    // labels keyed by their class key ("_any" for all when classes=None)
+    val labelIndex = new LabelIndex(labels match {
+      case None => Nil
       case Some(ls) => cfg.classes match {
-        case None => Map("_any" -> ls.map(_._1))
-        case Some(cs) =>
-          ls.filter { case (_, c) => cs.contains(c) }
-            .groupBy(_._2).view.mapValues(_.map(_._1)).toMap
+        case None => ls.map { case (wkb, _) => (wkb, "_any") }
+        case Some(cs) => ls.filter { case (_, c) => cs.contains(c) }
       }
-    }
+    })
 
     val basename = meta.raster_id
     val chipType = cfg.chipType
@@ -157,9 +156,12 @@ object ChipPipeline {
 
         val perClass: Seq[(Array[Byte], Array[Byte], Array[Byte])] =
           if (!haveLabels) Nil
-          else classKeys.map { k =>
-            val polys = polysByClass.getOrElse(k, Nil).map(Geom.fromWkb)
-            maskFromPolygons(polys, win, winT, noBorder, wantBound, wantDist)
+          else {
+            val reaching = labelIndex.reaching(win, affine)
+            classKeys.map { k =>
+              val polys = reaching.collect { case (g, c) if c == k => g }
+              maskFromPolygons(polys, win, winT, noBorder, wantBound, wantDist)
+            }
           }
 
         val kindsOrdered = Seq("extent", "boundary", "distance").filter(maskKinds.contains)

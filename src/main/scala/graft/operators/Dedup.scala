@@ -383,12 +383,6 @@ object Dedup {
       .select("doc_a", "doc_b", "jaccard_num", "jaccard_den")
   }
 
-  /** Exact n-gram Jaccard over externally-supplied candidate pairs. */
-  def verifyJaccard(docs: DataFrame, cand: DataFrame, w: Int,
-                    minJaccard: Double): DataFrame =
-    verifyJaccardOnShingles(shingleTableTh(docs, w).select("doc_id", "sh"),
-      cand, minJaccard)
-
   /** Representative pairs → all member pairs for the Jaccard family:
     * cross-group pairs expand with their verified fraction; within-group
     * pairs (identical texts) are exact matches (num = den = |shingles|),

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Affine, Geom, Rasterize, RasterMath, TileGrid, Window}
+import graft.core.{Affine, Geom, LabelIndex, TileGrid, Window}
 import graft.functions.CellFunctions
 import graft.sources.Fixtures
 import graft.sources.Model.{Page, RasterMeta}
@@ -24,6 +24,12 @@ import graft.sources.Model.{Page, RasterMeta}
   *     → partial agg (tile, py, px) — map-side combine caps shuffle volume
   *       at 16k rows/tile regardless of page count (skew-proof)
   *     → final per-tile assembly of the dense density chip + rescale + masks
+  *       (each tile burns only the labels whose extent reaches it)
+  *
+  * A resumable run ([[extractChipsResumable]]) picks its pending tiles on
+  * the driver, before any of this is planned: windows whose tile is already
+  * committed never reach the cell join, as satproc skips a window whose
+  * outputs exist before it reads it (reference: satproc/chips.py:227-233).
   *
   * At 100 TB the only wide stages are the cell join and the two-level
   * aggregation; both shuffle pre-combined, fixed-size records.
@@ -51,9 +57,15 @@ object PagesTiling {
 
   /** Tile table for one raster: grid windows + world bounds + covering cells
     * (exploded). Tiny relative to pages; Catalyst broadcasts it. */
-  def tileCells(spark: SparkSession, meta: RasterMeta, cfg: TilingConfig): DataFrame = {
+  def tileCells(spark: SparkSession, meta: RasterMeta, cfg: TilingConfig): DataFrame =
+    tileCells(spark, meta, cfg, windows(meta, cfg))
+
+  private def windows(meta: RasterMeta, cfg: TilingConfig): Seq[TileGrid.GridCell] =
+    TileGrid.squareWindows(cfg.size, cfg.step, meta.width, meta.height, cfg.mode)
+
+  private def tileCells(spark: SparkSession, meta: RasterMeta, cfg: TilingConfig,
+                        cells: Seq[TileGrid.GridCell]): DataFrame = {
     import spark.implicits._
-    val cells = TileGrid.squareWindows(cfg.size, cfg.step, meta.width, meta.height, cfg.mode)
     val tiles = spark.createDataset(cells.map(c =>
       (meta.raster_id, c.i, c.j, c.window.colOff, c.window.rowOff,
         c.window.width, c.window.height)))
@@ -89,11 +101,18 @@ object PagesTiling {
   def extractChips(spark: SparkSession, pages: Dataset[Page], meta: RasterMeta,
                    labels: Option[Seq[(Array[Byte], String)]] = None,
                    aoiWkb: Option[Array[Byte]] = None,
-                   cfg: TilingConfig = TilingConfig()): DataFrame = {
+                   cfg: TilingConfig = TilingConfig()): DataFrame =
+    chipsOver(spark, pages, meta, windows(meta, cfg), labels, aoiWkb, cfg)
+
+  /** [[extractChips]] over the given grid windows only. */
+  private def chipsOver(spark: SparkSession, pages: Dataset[Page], meta: RasterMeta,
+                        cells: Seq[TileGrid.GridCell],
+                        labels: Option[Seq[(Array[Byte], String)]],
+                        aoiWkb: Option[Array[Byte]], cfg: TilingConfig): DataFrame = {
     import spark.implicits._
     val affine = Affine(meta.a, meta.b, meta.c, meta.d, meta.e, meta.f)
     val pagesGeo = geotagged(spark, pages, cfg.cellRes)
-    var tiles = tileCells(spark, meta, cfg)
+    var tiles = tileCells(spark, meta, cfg, cells)
 
     // AOI filter on tiles (F1) — tile side is tiny, do it pre-join
     aoiWkb.foreach { wkb =>
@@ -124,8 +143,7 @@ object PagesTiling {
         col("width"), col("height"), col("py"), col("px"))
       .agg(count(lit(1)).as("n"), sum(when(col("text_ok"), 0L).otherwise(1L)).as("bad_text"))
 
-    val labelsLocal = labels
-    val sizeLocal = cfg.size
+    val labelIndex = labels.map(new LabelIndex(_))
     val chips = binned
       .groupBy("raster_id", "i", "j", "col_off", "row_off", "width", "height")
       .agg(collect_list(struct(col("py"), col("px"), col("n"))).as("bins"),
@@ -144,10 +162,10 @@ object PagesTiling {
         }
         // extent mask from labels (M4) on this tile's window
         val win = Window(bt.col_off, bt.row_off, bt.width, bt.height)
-        val mask: Array[Byte] = labelsLocal match {
+        val mask: Array[Byte] = labelIndex match {
           case None => Array.empty[Byte]
-          case Some(ls) =>
-            ChipPipeline.maskFromPolygons(ls.map(p => Geom.fromWkb(p._1)),
+          case Some(ix) =>
+            ChipPipeline.maskFromPolygons(ix.reaching(win, affine).map(_._1),
               win, affine.forWindow(win), extentNoBorder = false,
               wantBoundary = false, wantDistance = false)._1
         }
@@ -161,10 +179,15 @@ object PagesTiling {
   /** Flagship with the north rule's bookkeeping: chips are committed to an
     * Iceberg-style table with one manifest row per tile, a lineage row
     * mapping each output tile to its input snapshot + covering cell range,
-    * and per-stage metrics. A rerun anti-joins the committed manifest and
-    * computes ONLY missing tiles (satproc skip-existing at job level;
-    * within-job retry is Spark-native task retry). Returns the number of
-    * chips committed in this run. */
+    * and per-stage metrics. Resume picks the pending tiles before the page
+    * join, as satproc does (skip-existing at job level; within-job retry is
+    * Spark-native task retry): the driver reads this raster's committed
+    * `part_key`s once from the manifest, which sees committed snapshots only
+    * (a torn commit's tiles stay pending), drops those windows from the
+    * grid, and runs the pipeline over the rest. With no window left it
+    * returns 0 without planning a page scan. A window that yields no chip
+    * (no page lands in it) stays pending and is re-read on every run.
+    * Returns the number of chips committed in this run. */
   def extractChipsResumable(spark: SparkSession, pages: Dataset[Page],
                             meta: RasterMeta, table: graft.sources.IcebergLite,
                             labels: Option[Seq[(Array[Byte], String)]] = None,
@@ -173,9 +196,15 @@ object PagesTiling {
     import org.apache.spark.sql.functions.{col => c, _}
     import spark.implicits._
     val t0 = System.currentTimeMillis()
-    val chips = extractChips(spark, pages, meta, labels, None, cfg)
+    val prefix = s"${meta.raster_id}_"
+    val committed: Set[String] =
+      if (table.committedSnapshots().isEmpty) Set.empty
+      else table.manifests().select(c("part_key")).where(c("part_key").startsWith(prefix))
+        .as[String].collect().toSet
+    val cells = windows(meta, cfg).filterNot(w => committed.contains(s"$prefix${w.i}_${w.j}"))
+    if (cells.isEmpty) return 0L
+    val pending = chipsOver(spark, pages, meta, cells, labels, None, cfg)
       .withColumn("tile_key", concat_ws("_", c("raster_id"), c("i"), c("j")))
-    val pending = table.pendingWork(chips, "tile_key")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val n = pending.count()
     if (n > 0) {

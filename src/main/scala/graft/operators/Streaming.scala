@@ -27,7 +27,17 @@ object Streaming {
     * STATE volume, not the core count. 4 is the measured fixture-scale
     * optimum; a deployment raises it with actual state volume. */
   def defaultStatePartitions: Int =
-    sys.env.get("SPARK_GRAFT_STATE_PARTITIONS").flatMap(_.toIntOption).getOrElse(4)
+    statePartitionsFrom(sys.env.get("SPARK_GRAFT_STATE_PARTITIONS"))
+
+  /** Parse a `SPARK_GRAFT_STATE_PARTITIONS` value: unset → 4, a positive
+    * integer → itself; anything else (0, negative, not a number) fails here,
+    * naming the variable, instead of as a bad shuffle width mid-query. */
+  def statePartitionsFrom(raw: Option[String]): Int = raw match {
+    case None => 4
+    case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_STATE_PARTITIONS must be a positive integer, got '$v'"))
+  }
 
   /** Scope the streaming state-store provider around `f` and restore it.
     * "hdfs" (the Spark default) keeps all state as JVM objects in executor

@@ -36,6 +36,17 @@ class StateStoreSpec extends AnyFunSuite {
     Files.setLastModifiedTime(dest, FileTime.fromMillis(mtimeSec * 1000))
   }
 
+  test("SPARK_GRAFT_STATE_PARTITIONS parsing: unset is 4, positive kept, 0/negative/junk rejected") {
+    assert(Streaming.statePartitionsFrom(None) == 4)
+    assert(Streaming.statePartitionsFrom(Some("8")) == 8)
+    assert(Streaming.statePartitionsFrom(Some(" 2 ")) == 2)
+    Seq("0", "-1", "four", "", "2.5").foreach { v =>
+      val e = intercept[IllegalArgumentException](Streaming.statePartitionsFrom(Some(v)))
+      assert(e.getMessage.contains("SPARK_GRAFT_STATE_PARTITIONS"), e.getMessage)
+      assert(e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+  }
+
   test("rocksdb carries dedup state across micro-batches (20k keys, 3 batches); restart emits nothing") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("graft-rocksdb").toString
