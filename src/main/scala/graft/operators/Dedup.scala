@@ -261,7 +261,7 @@ object Dedup {
   private def dropHotKeys(rows: DataFrame, keyCols: Seq[String], cap: Int,
                           rowLimit: Long, probe: () => Long): DataFrame = {
     // rowLimit = Long.MaxValue disables the skew probe entirely (callers
-    // that know their corpus, and A/B measurement in tools.DedupProfile);
+    // that know their corpus);
     // `probe` is a thunk so call sites can short-circuit it for free when a
     // cheap upper bound (e.g. total band rows = nBands × |docs|) already
     // rules the degenerate regime out — fixture-scale runs pay zero for the
@@ -281,8 +281,8 @@ object Dedup {
   }
 
   /** Shingle-blocked candidate pairs with the DF cap applied — exposed so
-    * the planted hot-shingle scale test and tools.DedupBench can measure
-    * the candidate count (the blowup is invisible in the verified output). */
+    * the planted hot-shingle scale test can measure the candidate count
+    * (the blowup is invisible in the verified output). */
   private[graft] def ngramCandidates(docs: DataFrame, w: Int, dfCap: Int,
                                      rowLimit: Long = HotKeyWindowRowLimit): DataFrame =
     blockedPairs(dropHotKeys(shingleTableTh(docs, w), Seq("sh"), dfCap, rowLimit,
@@ -629,7 +629,7 @@ object Dedup {
     * doc_id) used to ride through both the token distinct and the bit-sum
     * aggregation, doubling each exchange's row width for a value that is
     * per-DOC, not per-token (measured at sf0.1: distinct 0.65→0.31 s,
-    * agg 0.46→0.23 s — see tools/SimhashProfile). */
+    * agg 0.46→0.23 s). */
   private def simhashOf(docs: DataFrame): DataFrame = {
     val tok = docs.select(col("doc_id"), explode(toks(col("text"))).as("tok"))
       .distinct()

@@ -183,10 +183,14 @@ object EventOps {
     * replays it with DuckDB's NATIVE ASOF LEFT JOIN — a genuinely
     * independent implementation family. Emits
     * (event_id, user_id, us, prior_event_id, us_since); the prior
-    * columns are NULL when no earlier right event exists. */
+    * columns are NULL when no earlier right event exists, and for a left
+    * row whose ts is NULL. */
   def asofJoin(events: DataFrame, leftType: String, rightType: String): DataFrame = {
     val us = unix_micros(col("ts").cast("timestamp"))
+    // a NULL-ts right row would sort first and become every later left
+    // row's prior; an as-of join never matches a NULL key, so drop it
     val tagged = events.where(col("event_type").isin(leftType, rightType))
+      .where(col("event_type") === leftType || us.isNotNull)
       .select(col("user_id"), us.as("us"),
         when(col("event_type") === leftType, lit(1)).otherwise(lit(0)).as("side"),
         col("event_id"))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Link-graph analytics over the crawl's domain graph — the curation
   * signal family (domain authority as a quality weight) that large-scale
@@ -16,6 +17,15 @@ object Graph {
     * few hundred MB of task state, far under executor memory, while the
     * loop above it pays iters × per-round shuffle fixed cost. */
   val LocalPrEdgeLimit = 2000000L
+
+  /** The single-task paths key nodes by Long, which is exact only for
+    * integral ids; any other id type (Double 1.5 would fold into 1) takes
+    * the distributed loop. */
+  private def longIds(edges: DataFrame): Boolean =
+    Seq("src", "dst").forall(c => edges.schema(c).dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
 
   /** PageRank (Page et al. 1999) in exact INTEGER micro-units — designed
     * so the cross-engine gate is a hash match, not a float truce: ranks
@@ -77,7 +87,7 @@ object Graph {
     // every round, so its lineage must not include the corpus scan
     val ew = edges.join(outW, Seq("src")).localCheckpoint(true)
 
-    if (ew.count() <= localEdgeLimit) {
+    if (longIds(edges) && ew.count() <= localEdgeLimit) {
       val idType = edges.schema(edges.schema.fieldIndex("src")).dataType
       val out = ew.select(col("src").cast("long"), col("dst").cast("long"),
           col("w").cast("long"), col("wout").cast("long"))
@@ -172,7 +182,7 @@ object Graph {
     require(degBound <= Long.MaxValue / 1000000000000L,
       s"hits: per-node weight $degBound would overflow the 1e12 headroom — rescale w")
 
-    if (nEdges <= localEdgeLimit) {
+    if (longIds(edges) && nEdges <= localEdgeLimit) {
       val idType = edges.schema(edges.schema.fieldIndex("src")).dataType
       val out = ew.select(col("src").cast("long"), col("dst").cast("long"),
           col("w").cast("long"))

@@ -18,7 +18,7 @@ import graft.sources.Model.{Page, RasterMeta}
   *   pages scan → html geotag extract + text invariant check (G5)
   *     → cell_id(lat, lon, res)                 [codegen Expression, G6]
   *   tiles (from raster metadata, a tiny table)
-  *     → tile_windows generator → bbox columns → explode(cell_cover)  [G2]
+  *     → driver-side TileGrid.squareWindows → bbox → explode(cell_cover) [G2]
   *   join on cell (broadcast when tile side is small; salted equi-join
   *   otherwise) → exact point-in-window refine on plain columns
   *     → partial agg (tile, py, px) — map-side combine caps shuffle volume

@@ -199,29 +199,6 @@ object Fixtures {
     spark.range(0, n, 1, partitions).map(k => page(k))
   }
 
-  /** Skewed geotag distribution: `hotPermille`/1000 of pages land inside
-    * ONE res-16 cell (an urban hotspot), the rest stay uniform — the
-    * worst-case input for the cell join's hot keys (SURVEY §7.3 item 2). */
-  def skewedPage(k: Long, hotPermille: Int): Page = {
-    if (k % 1000L < hotPermille) {
-      // hotspot: ~1/20 of a res-16 cell, centered in the lux extent
-      val lat = 50.109 + SplitMix64.unitDouble(k, 0) * 0.0002
-      val lon = 6.001 + SplitMix64.unitDouble(k, 1) * 0.0002
-      val text = pageText(k)
-      Page(s"https://example.org/p/$k",
-        new java.sql.Timestamp(Epoch2024 + (k % 86400L) * 1000L),
-        s"""<html><head><meta name="geo.position" content="$lat;$lon"><title>p$k</title></head><body><p>$text</p></body></html>"""
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        text, Seq("en", "es", "de", "fr")((k % 4).toInt))
-    } else page(k)
-  }
-
-  def skewedPages(spark: SparkSession, n: Long, hotPermille: Int = 900,
-                  partitions: Int = 32): Dataset[Page] = {
-    import spark.implicits._
-    spark.range(0, n, 1, partitions).map(k => skewedPage(k, hotPermille))
-  }
-
   /** The html→text extractor whose output must be byte-identical to the
     * `text` column per url (the BASELINE.json correctness invariant). */
   def extractText(html: Array[Byte]): String = {

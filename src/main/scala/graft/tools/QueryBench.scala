@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import scala.jdk.CollectionConverters._
 
 /** Per-query measurement loop for optimization work (guide §1: measure
   * first; NOT part of the driver contract — the frozen [[graft.Bench]] is).
@@ -10,8 +11,7 @@ import org.apache.spark.sql.SparkSession
   * task time) so the empirical loop can see WHERE a query spends its time
   * without the UI. Usage:
   *   runMain graft.tools.QueryBench [reps] name1 name2 ...
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
-  * SPARK_GRAFT_STAGES=1 prints the per-stage table. */
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32). */
 object QueryBench {
   def main(args: Array[String]): Unit = {
     val reps = args.headOption.flatMap(_.toIntOption).getOrElse(3)
@@ -61,12 +61,8 @@ object QueryBench {
             dt
           }
           println(f"QB $name%-24s min=${walls.min}%6.3f  all=${walls.map(w => f"$w%.3f").mkString(",")}")
-          if (sys.env.get("SPARK_GRAFT_STAGES").contains("1")) {
-            import scala.jdk.CollectionConverters._
-            val top = stages.asScala.toSeq.sortBy(-_.wallMs).take(12)
-            top.foreach(s => println(
-              f"QB-STAGE ${s.wallMs}%6d ms wall  ${s.tasks}%4d tasks  ${s.taskMs}%7d run  ${s.cpuMs}%7d cpu  ${s.gcMs}%5d gc  ${s.deserMs}%5d deser  ${s.name}"))
-          }
+          stages.asScala.toSeq.sortBy(-_.wallMs).take(12).foreach(s => println(
+            f"QB-STAGE ${s.wallMs}%6d ms wall  ${s.tasks}%4d tasks  ${s.taskMs}%7d run  ${s.cpuMs}%7d cpu  ${s.gcMs}%5d gc  ${s.deserMs}%5d deser  ${s.name}"))
       }
     }
     spark.stop()

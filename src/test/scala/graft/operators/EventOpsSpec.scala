@@ -141,4 +141,16 @@ class EventOpsSpec extends AnyFunSuite {
     assert(got(301L) == ((None, None)), s"cross-user leak: $got")
     assert(got.size == 5)
   }
+
+  test("asofJoin: a NULL-ts right event matches nothing; a NULL-ts left event is kept unmatched") {
+    import spark.implicits._
+    val events = Seq(
+      (501L, null: Timestamp, 1L, "purchase"),
+      (502L, new Timestamp(1700000001000L), 1L, "click"),
+      (503L, null: Timestamp, 1L, "click")
+    ).toDF("event_id", "ts", "user_id", "event_type")
+    val got = EventOps.asofJoin(events, "click", "purchase").collect()
+      .map(r => r.getLong(0) -> ((Option(r.get(3)), Option(r.get(4))))).toMap
+    assert(got == Map(502L -> ((None, None)), 503L -> ((None, None))), got.toString)
+  }
 }

@@ -129,4 +129,21 @@ class GraphSpec extends AnyFunSuite {
     assert(fast == ref, s"fast path diverged from reference")
     assert(loop == ref, s"distributed loop diverged from reference")
   }
+
+  test("non-integral ids: the default call equals the distributed loop for pageRank and hits") {
+    import spark.implicits._
+    // 1.0 and 1.5 are distinct nodes; a Long-keyed fast path would merge them
+    val edges = Seq((1.0, 1.5, 1L), (1.5, 2.0, 1L), (2.0, 1.0, 2L), (1.0, 2.0, 1L))
+      .toDF("src", "dst", "w")
+    def pr(limit: Long) = Graph.pageRank(edges, iters = 5, localEdgeLimit = limit)
+      .collect().map(r => r.getDouble(0) -> r.getLong(1)).toMap
+    def hs(limit: Long) = Graph.hits(edges, iters = 5, localEdgeLimit = limit)
+      .collect().map(r => r.getDouble(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val prLoop = pr(0L)
+    assert(prLoop.keySet == Set(1.0, 1.5, 2.0))
+    assert(pr(Graph.LocalPrEdgeLimit) == prLoop)
+    val hsLoop = hs(0L)
+    assert(hsLoop.keySet == Set(1.0, 1.5, 2.0))
+    assert(hs(Graph.LocalPrEdgeLimit) == hsLoop)
+  }
 }

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.core.Geom
+import graft.core.{Geom, SplitMix64}
 import graft.sources.Fixtures
+import graft.sources.Model.Page
 
 /** Web-scale graft invariants (BASELINE.json): byte-identical extracted
   * text per url; identical tile assignments across parallelism levels;
@@ -59,6 +60,32 @@ class PagesTilingSpec extends AnyFunSuite {
     assert(run(1) == run(4))
   }
 
+  test("salted join on a hot cell through the shuffle path: same assignment as unsalted") {
+    // broadcast off and AQE off on a private session, so the salted rows
+    // really meet the hot reducer and no other suite sees these settings
+    val hot = spark.newSession()
+    hot.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    hot.conf.set("spark.sql.adaptive.enabled", "false")
+    import hot.implicits._
+    val n = 20000L
+    val geo = PagesTiling.geotagged(hot,
+      hot.range(0, n, 1, 8).map(k => PagesTilingSpec.hotCellPage(k)), 16)
+    val maxCell = geo.groupBy("cell").count().agg(max("count")).head().getLong(0)
+    assert(maxCell >= n * 9 / 10, s"hot cell holds only $maxCell of $n pages")
+    val meta = Fixtures.luxMeta()
+    def run(salt: Int): Set[(String, Int, Int)] = {
+      val cfg = PagesTiling.TilingConfig(salt = salt, cellRes = 16)
+      val joined = PagesTiling.assignTiles(geo, PagesTiling.tileCells(hot, meta, cfg), cfg)
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin"), plan)
+      joined.select("url", "i", "j").collect()
+        .map(r => (r.getString(0), r.getInt(1), r.getInt(2))).toSet
+    }
+    val unsalted = run(1)
+    assert(unsalted.size >= n)
+    assert(unsalted == run(8))
+  }
+
   test("flagship: density chips on all 8 tiles, no text violations, mask burned") {
     val meta = Fixtures.luxMeta()
     val labels = Fixtures.labelGeoms().map { case (g, c) => (Geom.toWkb(g), c) }
@@ -81,5 +108,20 @@ class PagesTilingSpec extends AnyFunSuite {
       aoiWkb = Some(aoi))
     val tilesHit = chips.collect().map(r => (r.getAs[Int]("i"), r.getAs[Int]("j"))).toSet
     assert(tilesHit == Set((0, 0), (0, 1), (0, 2), (1, 0), (1, 1), (1, 2)))
+  }
+}
+
+object PagesTilingSpec {
+  /** Nine pages in ten sit in one ~1/20-cell hotspot of a single res-16
+    * cell inside the lux1 extent; the tenth is the uniform fixture page. */
+  def hotCellPage(k: Long): Page = {
+    val p = Fixtures.page(k)
+    if (k % 10 == 0) p
+    else {
+      val lat = 50.109 + SplitMix64.unitDouble(k, 0) * 0.0002
+      val lon = 6.001 + SplitMix64.unitDouble(k, 1) * 0.0002
+      p.copy(html = s"""<html><head><meta name="geo.position" content="$lat;$lon"><title>p$k</title></head><body><p>${p.text}</p></body></html>"""
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
   }
 }
